@@ -290,8 +290,18 @@ object WordShingleHashes {
   * is null; `na`/`nb` are null when their own array has a null element.
   */
 case class CosineParts(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  import org.apache.spark.sql.types.{DoubleType, FloatType, StructField, StructType}
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
+    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
+  import org.apache.spark.sql.types.{DoubleType, FloatType, NumericType, StructField, StructType}
+
+  // Integer and decimal arrays are widened to array<double> by the
+  // analyzer's implicit casts, as the HOF form widened each product; float
+  // and double arrays keep their own type, so their plan is unchanged.
+  override def inputTypes: Seq[DataType] = children.map(_.dataType match {
+    case dt @ ArrayType(FloatType | DoubleType, _) => dt
+    case ArrayType(_: NumericType, _) => ArrayType(DoubleType)
+    case dt => dt
+  })
 
   override def dataType: DataType = StructType(Seq(
     StructField("dot", DoubleType, nullable = true),
@@ -306,7 +316,7 @@ case class CosineParts(left: Expression, right: Expression)
   override def checkInputDataTypes(): TypeCheckResult =
     if (elemOk(left.dataType) && elemOk(right.dataType)) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"graft_cosine_parts requires array<float|double> args, got " +
+      s"graft_cosine_parts requires numeric array args, got " +
         s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
 
   private def isFloat(dt: DataType): Boolean =

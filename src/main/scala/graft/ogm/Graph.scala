@@ -142,6 +142,9 @@ final case class Graph(nodes: DataFrame, edges: DataFrame) {
     // shadow each other's session-global views. spark.sql analyzes eagerly,
     // so the returned DataFrame's plan is bound to THIS graph's tables
     // before the lock releases — only analysis serializes, never execution.
+    // The drop is by name in the session catalog: `spark.catalog.dropTempView`
+    // also uncaches the view's plan, which evicts this graph's own
+    // persisted node/edge tables.
     Graph.rawQueryLock.synchronized {
       nodes.createOrReplaceTempView("nodes")
       edges.createOrReplaceTempView("edges")
@@ -152,8 +155,10 @@ final case class Graph(nodes: DataFrame, edges: DataFrame) {
           s"raw query must return node-shaped rows; missing: ${missing.mkString(",")}")
         out
       } finally {
-        spark.catalog.dropTempView("nodes")
-        spark.catalog.dropTempView("edges")
+        val catalog = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+          .sessionState.catalog
+        catalog.dropTempView("nodes")
+        catalog.dropTempView("edges")
       }
     }
   }

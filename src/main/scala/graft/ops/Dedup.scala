@@ -185,11 +185,14 @@ object Dedup {
     require(nRecords >= 2, s"nRecords must be >= 2, got $nRecords")
     // canonicalize pair orientation (ADVICE r5): a truth pair stored (b,a)
     // must still hit the semi-join; least/greatest before distinct makes
-    // both inputs orientation-insensitive (no-op for already-oriented pairs)
-    val c = candidates.select(least(col(aCol), col(bCol)).as("a"),
-      greatest(col(aCol), col(bCol)).as("b")).distinct()
-    val t = truth.select(least(col(aCol), col(bCol)).as("a"),
-      greatest(col(aCol), col(bCol)).as("b")).distinct()
+    // both inputs orientation-insensitive (no-op for already-oriented pairs).
+    // A pair with a null endpoint is no pair: least/greatest skip nulls and
+    // would turn (null, x) into (x, x), so such rows are dropped first.
+    def pairs(df: DataFrame) = df.filter(col(aCol).isNotNull && col(bCol).isNotNull)
+      .select(least(col(aCol), col(bCol)).as("a"), greatest(col(aCol), col(bCol)).as("b"))
+      .distinct()
+    val c = pairs(candidates)
+    val t = pairs(truth)
     val totalPairs = nRecords * (nRecords - 1) / 2
     c.agg(count(lit(1)).as("n_candidates"))
       .crossJoin(t.agg(count(lit(1)).as("n_truth")))

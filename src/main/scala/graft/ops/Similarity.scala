@@ -28,11 +28,13 @@ object Similarity {
   def norm(a: Column): Column =
     sqrt(aggregate(a, lit(0.0d), (acc, v) => acc + v * v))
 
-  /** r6: native one-pass [[graft.functions.CosineSim]] — bit-identical to
+  /** Native one-pass cosine ([[graft.functions.functions.cosineSim]] over
+    * [[graft.functions.CosineParts]]) — bit-identical to
     * `dot(a, b) / (norm(a) * norm(b))` (same fold order, same float/double
     * promotion; parity asserted in CosineSimSpec) without the 4 array walks
     * + zip_with materialization + per-element lambda dispatch of the HOF
-    * composition. Every ANN/near-dup verify scores through this.
+    * composition. Integer and decimal arrays are widened to double first.
+    * Every ANN/near-dup verify scores through this.
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.functions.cosineSim(a, b)

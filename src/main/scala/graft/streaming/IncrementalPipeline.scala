@@ -51,7 +51,13 @@ object IncrementalPipeline {
   }
 
   /** In-memory accumulated state for local runs; production swaps these for
-    * Iceberg tables and `MERGE INTO`.
+    * Iceberg tables and `MERGE INTO`. Each merged table is an EAGER
+    * `localCheckpoint`, so the next merge and every read plan over a scan
+    * of its blocks, not over all earlier merges and delta scans: batch k
+    * costs O(state + delta). The nodes must be materialized before the edge
+    * merge, which references them twice (GraphLoader.pin). Retired blocks
+    * are freed by the ContextCleaner. Trade-off: the blocks have no lineage
+    * and die with their executor; [[DurableGraphState]] is the durable face.
     */
   final class GraphState(spark: SparkSession) {
     @volatile var nodes: Option[DataFrame] = None
@@ -61,19 +67,13 @@ object IncrementalPipeline {
       val entityRows = triples.select(col("subj").as("name"))
         .unionAll(triples.select(col("obj").as("name")))
         .groupBy("name").agg(count(lit(1)).as("mention_count"))
-      val newNodes = NodeSetOps.merge(nodes, entityRows, entitySpec)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      newNodes.count() // materialize before dropping lineage to prior state
+      val newNodes = NodeSetOps.merge(nodes, entityRows, entitySpec).localCheckpoint()
       val relRows = triples
         .groupBy("subj", "pred", "obj").agg(count(lit(1)).as("support"))
         .select(col("subj").as("start_name"), col("obj").as("end_name"),
           col("pred"), col("support"))
       val newEdges = RelSetOps.merge(edges, relRows, newNodes, relSpec,
-          relTypeCol = Some("pred"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      newEdges.count()
-      nodes.foreach(_.unpersist())
-      edges.foreach(_.unpersist())
+          relTypeCol = Some("pred")).localCheckpoint()
       nodes = Some(newNodes)
       edges = Some(newEdges)
     }

@@ -79,6 +79,25 @@ class CosineSimSpec extends SparkSpec {
     assertParity(df)
   }
 
+  test("integer and decimal arrays are widened to double; float/double plans are not") {
+    def casts(df: org.apache.spark.sql.DataFrame) =
+      df.select(functions.cosineSim(col("a"), col("b"))).queryExecution.analyzed
+        .expressions.flatMap(_.collect {
+          case c: org.apache.spark.sql.catalyst.expressions.Cast => c
+        })
+    val ints = Seq((Seq(1, 2, 3), Seq(4, -5, 6)), (Seq(7, 0), Seq(1, 1))).toDF("a", "b")
+    assertParity(ints)
+    assert(casts(ints).nonEmpty)
+    val mixed = Seq((Seq(1L, 2L), Seq(0.5, 0.25))).toDF("a", "b")
+    assertParity(mixed)
+    val dec = Seq((Seq(BigDecimal("1.5"), BigDecimal("2")), Seq(BigDecimal("3"), BigDecimal("-0.5"))))
+      .toDF("a", "b")
+    val got = dec.select(functions.cosineSim(col("a"), col("b"))).head().getDouble(0)
+    assert(math.abs(got - 3.5 / (2.5 * math.sqrt(9.25))) < 1e-12)
+    assert(casts(Seq((Seq(1.0, 2.0), Seq(3.0, 4.0))).toDF("a", "b")).isEmpty)
+    assert(casts(Seq((Seq(1.0f, 2.0f), Seq(3.0f, 4.0f))).toDF("a", "b")).isEmpty)
+  }
+
   test("on the embeddings fixture: identical rounded-6dp values") {
     val embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding").as("a"))

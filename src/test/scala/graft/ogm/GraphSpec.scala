@@ -275,6 +275,21 @@ class GraphSpec extends SparkSpec {
     assert(!spark.catalog.tableExists("nodes"))
   }
 
+  test("rawQuery leaves the caller's persisted node/edge tables cached") {
+    import org.apache.spark.storage.StorageLevel
+    val g0 = graph
+    val g = Graph(g0.nodes.persist(StorageLevel.MEMORY_AND_DISK),
+      g0.edges.persist(StorageLevel.MEMORY_AND_DISK))
+    try {
+      g.nodes.count(); g.edges.count()
+      assert(g.rawQuery("SELECT name FROM nodes", Seq("name")).count() == 4)
+      // dropping the contract views must not uncache the tables behind them
+      assert(g.nodes.storageLevel == StorageLevel.MEMORY_AND_DISK)
+      assert(g.edges.storageLevel == StorageLevel.MEMORY_AND_DISK)
+      assert(!spark.catalog.tableExists("nodes") && !spark.catalog.tableExists("edges"))
+    } finally g.release()
+  }
+
   test("typed read path rehydrates Dataset[T] (model.py:450-451,531-532)") {
     val g = graph
     val ds = g.matchNodesAs[PersonRow](Seq("Person"),

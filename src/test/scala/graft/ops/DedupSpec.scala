@@ -155,6 +155,15 @@ class DedupSpec extends SparkSpec {
       0.6)))
   }
 
+  test("blockingQuality: a pair with a null endpoint is dropped, not read as (x, x)") {
+    import spark.implicits._
+    val cand = Seq((Some(1L), Some(2L)), (None, Some(3L))).toDF("a", "b")
+    val truth = Seq((Some(1L), Some(2L)), (Some(3L), None)).toDF("a", "b")
+    val out = Dedup.blockingQuality(cand, truth, nRecords = 5)
+      .as[(Long, Long, Long, Double, Double)].head()
+    assert(out === ((1L, 1L, 1L, 1.0, 0.9)))
+  }
+
   test("semanticDedup: near-dups collapse within clusters, min id survives") {
     import spark.implicits._
     // two well-separated directions; ids 1/2/3 are near-identical copies of

@@ -161,6 +161,36 @@ class IncrementalPipelineSpec extends SparkSpec {
       s"edge diff: extra=${gotEdges.toSet -- wantEdges.toSet} missing=${wantEdges.toSet -- gotEdges.toSet}")
   }
 
+  test("mergeBatch cuts the lineage: state plans stop growing with batches") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val n = 400L
+    val dir = tmpDir("graft-lineage")
+    (0 until 4).foreach { b =>
+      spark.range(b * 100L, (b + 1) * 100L).map(id => Corpus.turnAt(id, n)).toDF()
+        .write.parquet(s"$dir/delta-$b")
+    }
+    def leaves(df: DataFrame) = df.queryExecution.analyzed.collectLeaves()
+    def deltaScans(df: DataFrame) = leaves(df).collect {
+      case l: LogicalRelation => l.relation
+    }.collect { case h: HadoopFsRelation => h.location.rootPaths.map(_.toString) }
+      .flatten.filter(_.contains(dir))
+
+    val state = new IncrementalPipeline.GraphState(spark)
+    def mergeDelta(b: Int): Unit =
+      state.mergeBatch(IncrementalPipeline.extractBatch(spark.read.parquet(s"$dir/delta-$b")))
+    mergeDelta(0); mergeDelta(1)
+    val after2 = (leaves(state.nodes.get).size, leaves(state.edges.get).size)
+    mergeDelta(2); mergeDelta(3)
+    val after4 = (leaves(state.nodes.get).size, leaves(state.edges.get).size)
+    assert(after2 == after4, s"leaves after 2 batches $after2, after 4 $after4")
+    assert(deltaScans(state.nodes.get).isEmpty && deltaScans(state.edges.get).isEmpty)
+    // the cut keeps the merged values: every subj+obj mention counted once
+    val triples = IncrementalPipeline.extractBatch(spark.read.parquet(s"$dir/delta-*")).count()
+    assert(state.nodes.get.agg(sum("mention_count")).head().getLong(0) == 2 * triples)
+    assert(state.edges.get.agg(sum("support")).head().getLong(0) == triples)
+  }
+
   test("windowed turn-rate aggregation (watermark + tumbling window)") {
     val turns = TranscriptGen.turns(spark, 300L, 4).toDF()
     val rates = IncrementalPipeline.turnRates(turns) // batch-mode window agg
