@@ -18,6 +18,8 @@ object PlanCheck {
       "q_filter_ops",      // pushdown of all predicate types
       "q_traverse_1hop",   // 3-way join selection
       "q_nodeset_merge",   // full-outer merge shape
+      "q_nodeset_merge_append", // append rule: ordered collect_list reduce
+      "q_relset_merge_idem", // B4 upsert: same merge kernel as nodes
       "q_dedup_exact",     // window over hash
       "q_kg_triples",      // agg pushdown/pruning
       "q_ann_topk",        // broadcast NL join + window

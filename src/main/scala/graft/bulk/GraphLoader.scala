@@ -28,68 +28,47 @@ object GraphLoader {
   /** `staged` carries the flattened `start_&lt;k&gt;` / `end_&lt;k&gt;` match columns (A7). */
   final case class EdgeBatch(spec: RelSpec, staged: DataFrame)
 
-  /** NodeSetOps.merge is label-scoped (a batch can only match target rows
+  /** Runs `step` over the batches in order, each into the previous result.
+    *
+    * NodeSetOps.merge is label-scoped (a batch can only match target rows
     * whose PRIMARY label equals the spec's — the Cypher
-    * `MERGE (n:Label {keys})` pattern), so an INITIAL load's k-node-set
-    * cascade does NOT need k chained full-outer joins over the growing
-    * uber-table: batches of different labels can never interact. Chain
-    * merges only WITHIN a label and union across labels — the load becomes
-    * one pass with zero cross-label joins (the chained form re-shuffles the
-    * whole table once per node set; a sliced-rewrite form was tried and
-    * re-evaluates the input 2^k times via filter diamonds). Incremental
-    * loads (`into` an existing graph) keep the plain cascade — its cost is
-    * the honest cost of merging into unknown prior state.
+    * `MERGE (n:Label {keys})` pattern) and edge identity is (src, dst, REL
+    * TYPE), so on an INITIAL merge load batches of different groups (primary
+    * label, rel type) can never match each other: chain merges only WITHIN a
+    * group and union across groups — one pass with zero cross-group joins.
+    * For nodes, the chained form re-shuffles the whole table once per node
+    * set (a sliced-rewrite form was tried and re-evaluates the input 2^k
+    * times via filter diamonds). For edges it is worse than a redundant
+    * shuffle: each cross-type merge's full-outer join condition contains
+    * `'TYPE_A' <=> 'TYPE_B'`, which Catalyst constant-folds to FALSE,
+    * stripping every equi-key and planning a
+    * BroadcastNestedLoopJoin(FullOuter, condition=false) — a union executed
+    * as an O(n·m) pair scan. Harmless at fixture scale, fatal at 10^9 edges.
+    * Creates and incremental loads (`into` existing state) keep the plain
+    * cascade: prior state can hold any group, so the join keys survive, and
+    * its cost is the honest cost of merging into unknown prior state.
     */
-  private def loadNodes(target: Option[DataFrame], batches: Seq[NodeBatch],
-                        create: Boolean): Option[DataFrame] =
-    (create, target) match {
-      case (true, _) | (false, Some(_)) =>
-        batches.foldLeft(target) { (acc, b) =>
-          Some(if (create) NodeSetOps.create(acc, b.rows, b.spec)
-               else NodeSetOps.merge(acc, b.rows, b.spec))
-        }
-      case (false, None) if batches.isEmpty => target
-      case (false, None) =>
-        val labelOrder = batches.map(_.spec.allLabels.head).distinct
-        val byLabel = batches.groupBy(_.spec.allLabels.head)
-        val chains = labelOrder.map { lbl =>
-          byLabel(lbl).foldLeft(Option.empty[DataFrame]) { (acc, b) =>
-            Some(NodeSetOps.merge(acc, b.rows, b.spec))
-          }.get
-        }
-        Some(chains.reduce(_.unionByName(_, allowMissingColumns = true)))
+  private def cascade[B](target: Option[DataFrame], batches: Seq[B], create: Boolean,
+                         group: B => String)(step: (Option[DataFrame], B) => DataFrame): Option[DataFrame] =
+    if (create || target.isDefined) batches.foldLeft(target)((acc, b) => Some(step(acc, b)))
+    else {
+      val byGroup = batches.groupBy(group)
+      batches.map(group).distinct
+        .map(g => byGroup(g).foldLeft(Option.empty[DataFrame])((acc, b) => Some(step(acc, b))).get)
+        .reduceOption(_.unionByName(_, allowMissingColumns = true))
     }
 
-  /** Same move as [[loadNodes]] on the edge side: edge identity is
-    * (src, dst, REL TYPE), so on an INITIAL merge load, batches of
-    * different rel types can never match each other — chain merges only
-    * WITHIN a type and union across types. This is not only the redundant
-    * shuffle it was for nodes: each cross-type merge's full-outer join
-    * condition contains `'TYPE_A' <=> 'TYPE_B'`, which Catalyst
-    * constant-folds to FALSE, stripping every equi-key and planning a
-    * BroadcastNestedLoopJoin(FullOuter, condition=false) — a union
-    * executed as an O(n·m) pair scan. Harmless at fixture scale, fatal at
-    * 10^9 edges. Incremental loads (`into` existing state) keep the plain
-    * cascade: prior state can hold any type, so the join keys survive.
-    */
+  private def loadNodes(target: Option[DataFrame], batches: Seq[NodeBatch],
+                        create: Boolean): Option[DataFrame] =
+    cascade(target, batches, create, (b: NodeBatch) => b.spec.allLabels.head) { (acc, b) =>
+      if (create) NodeSetOps.create(acc, b.rows, b.spec) else NodeSetOps.merge(acc, b.rows, b.spec)
+    }
+
   private def loadEdges(target: Option[DataFrame], nodes: DataFrame,
                         batches: Seq[EdgeBatch], create: Boolean): Option[DataFrame] =
-    (create, target) match {
-      case (true, _) | (false, Some(_)) =>
-        batches.foldLeft(target) { (acc, b) =>
-          Some(if (create) RelSetOps.create(acc, b.staged, nodes, b.spec)
-               else RelSetOps.merge(acc, b.staged, nodes, b.spec))
-        }
-      case (false, None) if batches.isEmpty => target
-      case (false, None) =>
-        val typeOrder = batches.map(_.spec.relType).distinct
-        val byType = batches.groupBy(_.spec.relType)
-        val chains = typeOrder.map { t =>
-          byType(t).foldLeft(Option.empty[DataFrame]) { (acc, b) =>
-            Some(RelSetOps.merge(acc, b.staged, nodes, b.spec))
-          }.get
-        }
-        Some(chains.reduce(_.unionByName(_, allowMissingColumns = true)))
+    cascade(target, batches, create, (b: EdgeBatch) => b.spec.relType) { (acc, b) =>
+      if (create) RelSetOps.create(acc, b.staged, nodes, b.spec)
+      else RelSetOps.merge(acc, b.staged, nodes, b.spec)
     }
 
   /** Cascade CREATE: blind-append node sets, then resolve + append edges. */

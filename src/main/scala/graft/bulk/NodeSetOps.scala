@@ -3,7 +3,6 @@ package graft.bulk
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StringType}
 import graft.schema.NodeSpec
 
 /** NodeSet semantics (reference: graphio/bulk/nodeset.py) re-expressed as
@@ -17,18 +16,14 @@ import graft.schema.NodeSpec
   *
   * Design for scale: no driver-side buffering — "add_node" is just rows in a
   * DataFrame. Dedup/merge are expressed so Catalyst plans them as
-  * partial-aggregate + single shuffle on the merge keys; the full-outer merge
-  * join shuffles both sides on the same keys so repeated merges into the same
-  * table reuse the hash partitioning. At production scale the merge lowers to
-  * `MERGE INTO <iceberg table> ON <mergeKeys>`; the column rules below are
-  * exactly the UPDATE/INSERT clause rules.
+  * partial-aggregate + single shuffle on the merge keys. At production scale
+  * the merge lowers to `MERGE INTO <iceberg table> ON <mergeKeys>`; the
+  * [[MergeRules]] column rules are exactly the UPDATE/INSERT clause rules.
   */
 object NodeSetOps {
 
-  /** Explicit ingest-order column. Spark has no implicit row order, so
-    * first-wins dedup (nodeset.py:65-72,100-104) needs an explicit ordinal.
-    */
-  val OrdCol = "_graft_ord"
+  /** Ingest-order column, see [[MergeRules.OrdCol]]. */
+  val OrdCol = MergeRules.OrdCol
   /** Flag column: rows added with force=True bypass dedup AND do not update
     * the dedup index (nodeset.py:74-106; test_nodeset_deduplication.py:156-182).
     */
@@ -37,24 +32,9 @@ object NodeSetOps {
 
   private def hasCol(df: DataFrame, c: String) = df.columns.contains(c)
 
-  /** Stamp a deterministic ingest order if absent. monotonically_increasing_id
-    * is ordered within and across input partitions for a deterministic source
-    * (partition id in the high bits), which is exactly the buffer-order
-    * semantics of the reference's Python list.
-    */
-  def withIngestOrder(rows: DataFrame): DataFrame =
-    if (hasCol(rows, OrdCol)) rows else rows.withColumn(OrdCol, monotonically_increasing_id())
-
-  /** A1 — row ingest: overlay default_props (row value wins over the default;
-    * nodeset.py:96-97) and stamp ingest order.
-    */
-  def ingest(rows: DataFrame, spec: NodeSpec): DataFrame = {
-    val ordered = withIngestOrder(rows)
-    spec.defaultProps.foldLeft(ordered) { case (df, (k, v)) =>
-      if (hasCol(df, k)) df.withColumn(k, coalesce(col(k), lit(v)))
-      else df.withColumn(k, lit(v))
-    }
-  }
+  /** A1 — row ingest: overlay default_props and stamp ingest order. */
+  def ingest(rows: DataFrame, spec: NodeSpec): DataFrame =
+    MergeRules.ingest(rows, spec.defaultProps)
 
   /** A2 — first-wins distinct by merge-key tuple. Force rows are always kept
     * and never participate in (or update) the dedup index.
@@ -65,14 +45,15 @@ object NodeSetOps {
     * never shadows later non-force rows.
     *
     * r6 note (measured, kept deliberately): a min_by(struct(whole row), ord)
-    * aggregation was tried in place of the window — unlike reduceBatch's
-    * per-column aggregates it carries EVERY column inside the struct, so the
-    * map side copies whole rows into the agg hash map while the exchange
-    * still moves the same bytes; the bench regressed 0.96 s → 1.31 s and the
-    * form has no shuffle-byte advantage at scale either. The window stays.
+    * aggregation was tried in place of the window — unlike the merge
+    * reduce's per-column aggregates it carries EVERY column inside the
+    * struct, so the map side copies whole rows into the agg hash map while
+    * the exchange still moves the same bytes; the bench regressed
+    * 0.96 s → 1.31 s and the form has no shuffle-byte advantage at scale
+    * either. The window stays.
     */
   def dedupFirstWins(rows: DataFrame, mergeKeys: Seq[String]): DataFrame = {
-    val df = withIngestOrder(rows)
+    val df = MergeRules.withIngestOrder(rows)
     val force: Column = if (hasCol(df, ForceCol)) coalesce(col(ForceCol), lit(false)) else lit(false)
     df.withColumn("_graft_rn", row_number().over(
         Window.partitionBy((mergeKeys.map(col) :+ when(force, col(OrdCol)).otherwise(lit(-1L))): _*)
@@ -96,73 +77,9 @@ object NodeSetOps {
     }
   }
 
-  /** Intra-batch reduce: graphio's UNWIND processes a batch in row order —
-    * for duplicate keys within one merge call the first row "creates" and
-    * later rows "match": scalars end at the last non-null value (ON MATCH
-    * SET n += properties), preserved props keep the first value, append
-    * props accumulate in ingest order (nodeset.py:269-330).
-    *
-    * r6: planned as ONE hash aggregation on the merge keys — partial
-    * (map-side) aggregation shrinks the exchange and there is no
-    * per-partition sort at all (guide §2.3 "aggregate before you shuffle";
-    * the previous window + row_number form shuffled every input row and
-    * sorted each partition). Per-column aggregate rules are value-identical
-    * to the windowed forms given the ingest-order contract (OrdCol is a
-    * total order within a key):
-    *   last non-null  -> max_by(c, ord over rows with c non-null)
-    *   first non-null -> min_by(c, ord over rows with c non-null)
-    *   ordered append -> collect_list(struct(ord, c)) sorted by ord
-    * (max_by/min_by skip rows whose ordering expression is null — the
-    * ignoreNulls equivalence; asserted in NodeSetOpsSpec/PropertySpec and
-    * the B2 gates).
-    */
-  private[graft] def reduceBatch(rows: DataFrame, spec: NodeSpec): DataFrame = {
-    val df = withIngestOrder(rows).drop(ForceCol)
-    val keys = spec.mergeKeys
-    val propCols = df.columns.filterNot(c => keys.contains(c) || c == OrdCol).toSeq
-    val ord = col(OrdCol)
-    val aggs = propCols.map { c =>
-      val cc = col(c)
-      val v =
-        if (spec.appendProps.contains(c)) {
-          // accumulate every non-null occurrence in ingest order (the
-          // collect_list-over-window semantics); comparator sort touches
-          // only the ord field, so element types never need orderability
-          val sorted = array_sort(
-            collect_list(when(cc.isNotNull, struct(ord.as("o"), cc.as("v")))),
-            (l, r) => when(l("o") < r("o"), -1).when(l("o") > r("o"), 1).otherwise(0))
-          val vals = transform(sorted, x => x("v"))
-          df.schema(c).dataType match {
-            case _: ArrayType => flatten(vals) // inputs already arrays (re-merge)
-            case _            => vals
-          }
-        } else if (spec.preserve.contains(c)) min_by(cc, when(cc.isNotNull, ord))
-        else if (spec.sumProps.contains(c)) sum(cc)
-        else if (spec.minProps.contains(c)) min(cc)
-        else if (spec.maxProps.contains(c)) max(cc)
-        else max_by(cc, when(cc.isNotNull, ord))
-      v.as(c)
-    }
-    if (aggs.isEmpty) df.drop(OrdCol).distinct() // keys-only batch
-    else df.groupBy(keys.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .select(df.columns.filterNot(_ == OrdCol).map(col).toIndexedSeq: _*)
-  }
-
-  /** B2 — bulk merge (keyed upsert) with the reference's four column rules
-    * (nodeset.py:269-330; goldens test_query_utils.py:60-92):
-    *   - not matched: INSERT; append_props values wrapped into 1-elem arrays;
-    *   - matched, plain scalar: update wins (n += properties);
-    *   - matched, preserved: target value kept (apoc.map.removeKeys);
-    *   - matched, append (and not preserved): target array ++ update values;
-    *   - labels accumulate (SET n:Extra → array_union).
-    *
-    * Deviation (documented): a null update value is treated as "key absent"
-    * (dict rows can omit keys; fixed-schema DataFrames can't).
-    *
-    * Scale note: this is the local-materialization form of
-    * `MERGE INTO nodes USING updates ON <mergeKeys>`; both sides shuffle on
-    * the merge keys once and AQE handles skewed keys.
+  /** B2 — bulk merge (keyed upsert) by the [[MergeRules]] column rules
+    * (nodeset.py:269-330; goldens test_query_utils.py:60-92); labels
+    * accumulate (SET n:Extra → array_union).
     *
     * Per-call overrides mirror the reference's merge(...) kwargs
     * (nodeset.py:186-196): `preserve` / `appendProps` replace the container
@@ -177,88 +94,21 @@ object NodeSetOps {
       preserve = preserve.getOrElse(spec0.preserve),
       appendProps = appendProps.getOrElse(spec0.appendProps),
       mergeKeys = mergeProperties.getOrElse(spec0.mergeKeys))
-    val batch0 = reduceBatch(ingest(rows, spec), spec)
+    val rules = MergeRules.Rules(spec.preserve, spec.appendProps, spec.sumProps,
+      spec.minProps, spec.maxProps)
     val newLabels = lit(spec.allLabels.toArray)
-    // Wrap append columns & stamp labels for the "fresh table" / INSERT side.
-    def asInsert(df: DataFrame): DataFrame = {
-      val wrapped = spec.appendProps.foldLeft(df) { (acc, c) =>
-        if (!hasCol(acc, c)) acc
-        else acc.schema(c).dataType match {
-          case _: ArrayType => acc
-          case _            => acc.withColumn(c, array(col(c)))
-        }
-      }
-      wrapped.withColumn(LabelsCol, newLabels)
-    }
-
-    target match {
-      case None =>
-        // same column order as the merged path: keys, sorted props, labels
-        val ins = asInsert(batch0)
-        val props = ins.columns.filterNot(c =>
-          spec.mergeKeys.contains(c) || c == LabelsCol).sorted
-        ins.select((spec.mergeKeys ++ props :+ LabelsCol).map(col): _*)
-      case Some(t0) =>
-        val batch = asInsert(batch0)
-        val t = if (hasCol(t0, LabelsCol)) t0
-                else t0.withColumn(LabelsCol, lit(Array.empty[String]))
-        // Align schemas: every prop col present on both sides.
-        val tCols = t.columns.toSet
-        val uCols = batch.columns.toSet
-        val tAligned = (uCols -- tCols).foldLeft(t)((acc, c) =>
-          acc.withColumn(c, lit(null).cast(batch.schema(c).dataType)))
-        val uAligned = (tCols -- uCols).foldLeft(batch)((acc, c) =>
-          acc.withColumn(c, lit(null).cast(t.schema(c).dataType)))
-
-        val keys = spec.mergeKeys
-        val tt = tAligned.withColumn("_t_exists", lit(true)).alias("t")
-        val uu = uAligned.withColumn("_u_exists", lit(true)).alias("u")
-        // label-scoped like Cypher MERGE (n:Label {keys}): only rows whose
-        // PRIMARY label matches the spec's can match — two node sets with
-        // different primary labels never collide on a shared key value
-        // (nodeset.py:269: the MERGE pattern carries the label)
-        val labelCond = element_at(col(s"t.$LabelsCol"), 1) <=> lit(spec.allLabels.head)
-        val cond = keys.map(k => col(s"t.$k") <=> col(s"u.$k")).reduce(_ && _) && labelCond
-        val joined = tt.join(uu, cond, "full_outer")
-
-        val tEx = coalesce(col("t._t_exists"), lit(false))
-        val uEx = coalesce(col("u._u_exists"), lit(false))
-        val propCols = (tCols ++ uCols) -- keys - LabelsCol - "_t_exists" - "_u_exists" - OrdCol - ForceCol
-
-        val keyCols = keys.map(k => coalesce(col(s"u.$k"), col(s"t.$k")).as(k))
-        val outProps = propCols.toSeq.sorted.map { c =>
-          val tc = col(s"t.$c"); val uc = col(s"u.$c")
-          val merged =
-            if (spec.preserve.contains(c)) {
-              // matched: keep target (even null); insert: update value
-              when(tEx, tc).otherwise(uc)
-            } else if (spec.appendProps.contains(c)) {
-              // preserve beats append handled above; here: concat arrays
-              when(tEx && uEx, concat(coalesce(tc, array()), coalesce(uc, array())))
-                .when(tEx, tc)
-                .otherwise(uc)
-            } else if (spec.sumProps.contains(c)) {
-              // arithmetic update on match: n.c = n.c + u.c (nulls = 0)
-              when(tEx && uEx, coalesce(tc, lit(0)) + coalesce(uc, lit(0)))
-                .when(tEx, tc)
-                .otherwise(uc)
-            } else if (spec.minProps.contains(c)) {
-              // temporal validity: first_seen = least ever merged
-              // (least/greatest skip nulls)
-              when(tEx && uEx, least(tc, uc)).when(tEx, tc).otherwise(uc)
-            } else if (spec.maxProps.contains(c)) {
-              when(tEx && uEx, greatest(tc, uc)).when(tEx, tc).otherwise(uc)
-            } else {
-              when(uEx, coalesce(uc, tc)).otherwise(tc)
-            }
-          merged.as(c)
-        }
-        val outLabels = when(uEx,
-            array_union(coalesce(col(s"t.$LabelsCol"), array()), newLabels))
-          .otherwise(col(s"t.$LabelsCol")).as(LabelsCol)
-
-        joined.select(keyCols ++ outProps :+ outLabels: _*)
-    }
+    val tLabels = col(s"t.$LabelsCol")
+    MergeRules.merge(
+      target.map(t => if (hasCol(t, LabelsCol)) t
+                      else t.withColumn(LabelsCol, lit(Array.empty[String]))),
+      ingest(rows, spec).drop(ForceCol), spec.mergeKeys, rules,
+      // label-scoped like Cypher MERGE (n:Label {keys}): only rows whose
+      // PRIMARY label matches the spec's can match — two node sets with
+      // different primary labels never collide on a shared key value
+      // (nodeset.py:269: the MERGE pattern carries the label)
+      scope = Some(element_at(tLabels, 1) <=> lit(spec.allLabels.head)),
+      stamp = Some(MergeRules.Stamp(LabelsCol, newLabels, uEx =>
+        when(uEx, array_union(coalesce(tLabels, array()), newLabels)).otherwise(tLabels))))
   }
 
   /** A6 — union of property keys across the table (schema is explicit here,

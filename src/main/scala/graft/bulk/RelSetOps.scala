@@ -1,10 +1,9 @@
 package graft.bulk
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.ArrayType
 import graft.schema.{ArrayKey, EqKey, KeyMatch, RelSpec}
+import MergeRules.OrdCol
 
 /** RelationshipSet semantics (reference: graphio/bulk/relationshipset.py) as
   * DataFrame transforms.
@@ -26,12 +25,9 @@ import graft.schema.{ArrayKey, EqKey, KeyMatch, RelSpec}
   * shuffle-joinable instead of falling into BroadcastNestedLoopJoin.
   */
 object RelSetOps {
-  val OrdCol = NodeSetOps.OrdCol
   val SrcId = "src_id"
   val DstId = "dst_id"
   val RelType = "rel_type"
-
-  private def hasCol(df: DataFrame, c: String) = df.columns.contains(c)
 
   /** Stable node identity for a node-table row: hash of (primary label,
     * merge-key values). Mirrors Neo4j's internal node id at the semantic
@@ -50,24 +46,13 @@ object RelSetOps {
       xxhash64(element_at(col(NodeSetOps.LabelsCol), 1),
         struct(mergeKeys.map(col): _*)))
 
-  /** A3 — edge ingest: overlay default rel props (relationshipset.py:121-126)
-    * and stamp ingest order.
-    */
-  def ingest(rows: DataFrame, spec: RelSpec): DataFrame = {
-    val ordered = NodeSetOps.withIngestOrder(rows)
-    spec.defaultProps.foldLeft(ordered) { case (df, (k, v)) =>
-      if (hasCol(df, k)) df.withColumn(k, coalesce(col(k), lit(v)))
-      else df.withColumn(k, lit(v))
-    }
-  }
-
   /** A4 — staged-edge uniqueness (rs.unique=True): drop exact duplicates of
     * (endpoint keys, props). Deviation (documented in SURVEY §2 A4): the
     * reference keys on frozenset(values) — order/key-name-insensitive and
     * collision-prone; we key on the canonical column tuple.
     */
   def uniqueEdges(rows: DataFrame, spec: RelSpec): DataFrame = {
-    val df = NodeSetOps.withIngestOrder(rows)
+    val df = MergeRules.withIngestOrder(rows)
     val keyCols = df.columns.filterNot(_ == OrdCol).toSeq
     // r6: every column except the ordinal IS the group key, so the kept
     // (first) row differs from its duplicates only in OrdCol — one hash
@@ -132,7 +117,7 @@ object RelSetOps {
     */
   def resolve(edges: DataFrame, nodes: DataFrame, spec: RelSpec,
               relTypeCol: Option[String] = None): DataFrame = {
-    val e0 = ingest(edges, spec)
+    val e0 = MergeRules.ingest(edges, spec.defaultProps) // A3: default rel props
     val e1 = resolveEndpoint(e0, nodes, spec.startNodeLabels, spec.startNodeProperties, "start", SrcId)
     val e2 = resolveEndpoint(e1, nodes, spec.endNodeLabels, spec.endNodeProperties, "end", DstId)
     val startCols = spec.startNodeProperties.map(k => s"start_${k.name}")
@@ -154,44 +139,9 @@ object RelSetOps {
     }
   }
 
-  /** Intra-batch reduce on edge identity (src,dst,type): later rows overwrite
-    * scalars, append props accumulate in order — same rules as nodes (B4,
-    * relationshipset.py:373-450).
-    */
-  private[graft] def reduceBatch(resolved: DataFrame, spec: RelSpec): DataFrame = {
-    // r6: same hash-aggregation rewrite as NodeSetOps.reduceBatch (see the
-    // rule table there): partial agg on the edge identity, no sort.
-    val keys = Seq(SrcId, DstId, RelType)
-    val df = NodeSetOps.withIngestOrder(resolved)
-    val propCols = df.columns.filterNot(c => keys.contains(c) || c == OrdCol).toSeq
-    val ord = col(OrdCol)
-    val aggs = propCols.map { c =>
-      val cc = col(c)
-      val v =
-        if (spec.appendProps.contains(c)) {
-          val sorted = array_sort(
-            collect_list(when(cc.isNotNull, struct(ord.as("o"), cc.as("v")))),
-            (l, r) => when(l("o") < r("o"), -1).when(l("o") > r("o"), 1).otherwise(0))
-          val vals = transform(sorted, x => x("v"))
-          df.schema(c).dataType match {
-            case _: ArrayType => flatten(vals)
-            case _            => vals
-          }
-        }
-        else if (spec.sumProps.contains(c)) sum(cc)
-        else if (spec.minProps.contains(c)) min(cc)
-        else if (spec.maxProps.contains(c)) max(cc)
-        else max_by(cc, when(cc.isNotNull, ord))
-      v.as(c)
-    }
-    if (aggs.isEmpty) df.drop(OrdCol).distinct()
-    else df.groupBy(keys.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .select(df.columns.filterNot(_ == OrdCol).map(col).toIndexedSeq: _*)
-  }
-
   /** B4 — bulk edge merge: endpoint resolution as B3, then keyed upsert on
-    * (src_id, dst_id, rel_type). Re-merging the same batch keeps counts
+    * (src_id, dst_id, rel_type) by the [[MergeRules]] column rules (edges
+    * have no preserve). Re-merging the same batch keeps counts
     * stable (idempotence, test_relationshipset.py:244-256).
     *
     * `appendProps` is the per-call override of the container config —
@@ -209,58 +159,7 @@ object RelSetOps {
     * rel_type). This is the `MERGE INTO edges ON (src_id, dst_id, rel_type)`
     * core without the resolution joins.
     */
-  def mergeResolved(target: Option[DataFrame], resolved: DataFrame, spec: RelSpec): DataFrame = {
-    val batch0 = reduceBatch(resolved, spec)
-    def asInsert(df: DataFrame): DataFrame =
-      spec.appendProps.foldLeft(df) { (acc, c) =>
-        if (!hasCol(acc, c)) acc
-        else acc.schema(c).dataType match {
-          case _: ArrayType => acc
-          case _            => acc.withColumn(c, array(col(c)))
-        }
-      }
-    target match {
-      case None =>
-        val ins = asInsert(batch0)
-        val keys = Seq(SrcId, DstId, RelType)
-        val props = ins.columns.filterNot(keys.contains).sorted
-        ins.select((keys ++ props).map(col): _*)
-      case Some(t0) =>
-        val batch = asInsert(batch0)
-        val tCols = t0.columns.toSet
-        val uCols = batch.columns.toSet
-        val t = (uCols -- tCols).foldLeft(t0)((acc, c) =>
-          acc.withColumn(c, lit(null).cast(batch.schema(c).dataType)))
-        val u = (tCols -- uCols).foldLeft(batch)((acc, c) =>
-          acc.withColumn(c, lit(null).cast(t0.schema(c).dataType)))
-        val keys = Seq(SrcId, DstId, RelType)
-        val tt = t.withColumn("_t_exists", lit(true)).alias("t")
-        val uu = u.withColumn("_u_exists", lit(true)).alias("u")
-        val cond = keys.map(k => col(s"t.$k") <=> col(s"u.$k")).reduce(_ && _)
-        val joined = tt.join(uu, cond, "full_outer")
-        val tEx = coalesce(col("t._t_exists"), lit(false))
-        val uEx = coalesce(col("u._u_exists"), lit(false))
-        val propCols = (tCols ++ uCols) -- keys - "_t_exists" - "_u_exists"
-        val keyCols = keys.map(k => coalesce(col(s"u.$k"), col(s"t.$k")).as(k))
-        val outProps = propCols.toSeq.sorted.map { c =>
-          val tc = col(s"t.$c"); val uc = col(s"u.$c")
-          val merged =
-            if (spec.appendProps.contains(c))
-              when(tEx && uEx, concat(coalesce(tc, array()), coalesce(uc, array())))
-                .when(tEx, tc).otherwise(uc)
-            else if (spec.sumProps.contains(c))
-              // arithmetic update on match: r.c = r.c + u.c (nulls = 0)
-              when(tEx && uEx, coalesce(tc, lit(0)) + coalesce(uc, lit(0)))
-                .when(tEx, tc).otherwise(uc)
-            else if (spec.minProps.contains(c))
-              // temporal validity interval: first_seen (least/greatest skip nulls)
-              when(tEx && uEx, least(tc, uc)).when(tEx, tc).otherwise(uc)
-            else if (spec.maxProps.contains(c))
-              when(tEx && uEx, greatest(tc, uc)).when(tEx, tc).otherwise(uc)
-            else when(uEx, coalesce(uc, tc)).otherwise(tc)
-          merged.as(c)
-        }
-        joined.select(keyCols ++ outProps: _*)
-    }
-  }
+  def mergeResolved(target: Option[DataFrame], resolved: DataFrame, spec: RelSpec): DataFrame =
+    MergeRules.merge(target, resolved, Seq(SrcId, DstId, RelType),
+      MergeRules.Rules(Nil, spec.appendProps, spec.sumProps, spec.minProps, spec.maxProps))
 }

@@ -106,6 +106,13 @@ class NodeSetOpsSpec extends SparkSpec {
     assert(got == Seq("value"))
   }
 
+  test("preserve beats append within one batch (nodeset.py:294-298)") {
+    val spec = simpleSpec.copy(preserve = Seq("key"), appendProps = Seq("key"))
+    val rows = Seq((1L, "value", 1L), (1L, "other_value", 2L)).toDF("uuid", "key", NodeSetOps.OrdCol)
+    val got = NodeSetOps.merge(None, rows, spec).collect()(0).getAs[scala.collection.Seq[String]]("key")
+    assert(got == Seq("value"))
+  }
+
   test("labels accumulate across merges of different specs (test_nodeset.py:358-373)") {
     val specA = NodeSpec(labels = Seq("Test"), mergeKeys = Seq("uuid"), additionalLabels = Seq("Foo"))
     val specB = NodeSpec(labels = Seq("Test"), mergeKeys = Seq("uuid"), additionalLabels = Seq("Bar"))
@@ -164,6 +171,18 @@ class NodeSetOpsSpec extends SparkSpec {
     val rows = Seq((1L, 10L, 1L), (1L, 3L, 2L)).toDF("uuid", "cnt", NodeSetOps.OrdCol)
     val t = NodeSetOps.merge(None, rows, spec)
     assert(t.collect()(0).getAs[Long]("cnt") == 13L)
+  }
+
+  test("double sumProps add in ingest order, not arrival order; all-null sums to null") {
+    val spec = simpleSpec.copy(sumProps = Seq("w"))
+    // one partition, arrival order 1e16, -1e16, 1.0 (sum 1.0); ingest order
+    // 1.0, 1e16, -1e16 loses the 1.0 to rounding (sum 0.0)
+    val rows = Seq((1L, Option(1e16), 2L), (1L, Option(-1e16), 3L), (1L, Option(1.0), 1L),
+        (2L, Option.empty[Double], 4L))
+      .toDF("uuid", "w", NodeSetOps.OrdCol).coalesce(1)
+    val byId = NodeSetOps.merge(None, rows, spec).collect()
+      .map(r => r.getAs[Long]("uuid") -> Option(r.getAs[java.lang.Double]("w"))).toMap
+    assert(byId == Map(1L -> Some(0.0), 2L -> None))
   }
 
   test("intra-batch duplicate keys: last scalar wins, appends accumulate in order") {

@@ -99,6 +99,16 @@ class RelSetOpsSpec extends SparkSpec {
     assert(rows(0).getAs[Long]("support") == 7L)
   }
 
+  test("double sumProps on edges add in ingest order, not arrival order") {
+    // already resolved, so no endpoint join reorders the one partition
+    val resolved = Seq((1e16, 2L), (-1e16, 3L), (1.0, 1L))
+      .map { case (w, ord) => (1L, 1L, "TEST", w, ord) }
+      .toDF(RelSetOps.SrcId, RelSetOps.DstId, RelSetOps.RelType, "w", NodeSetOps.OrdCol)
+      .coalesce(1)
+    val rows = RelSetOps.mergeResolved(None, resolved, spec.copy(sumProps = Seq("w"))).collect()
+    assert(rows.map(_.getAs[Double]("w")).toSeq == Seq(0.0))
+  }
+
   test("node identity survives label accumulation: edges not orphaned (stability)") {
     // create Person nodes, resolve edges, then merge an extra label onto the
     // nodes — previously the id hashed the FULL labels array, so the added
